@@ -71,14 +71,14 @@ object SparkEntry {
     "q50_point_sample"     -> (EngineOracle.sampleCells _),
     "q51_profile"          -> (Engine.profileExtract _),
     "q52_id_dates"         -> (Engine.idDates _),
-    // q53/q56/q58/q68 retired from the registry (VERDICT r4 #6): their
-    // operators are oracle-checked STRICTLY by the sibling rows q81
-    // (full feature row incl. std + aHash), q82 (banded-LSH phash dedup),
-    // q76 (Theil–Sen) and q98 (full RANSAC); the retired full-float forms
-    // stay exercised by the golden ScalaTest suites (MultimodalSpec,
-    // StackSpec) and remain public API. Remaining no_oracle rows: exactly
-    // q51/q59/q64 — the full-scale float forms whose strict siblings
-    // (q79/q93/q94) cannot express the raw-embedding/full-image runs.
+    // q53/q56/q58/q68 retired from the registry (VERDICT r4 #6), query
+    // bodies deleted: their operators are covered by the golden ScalaTest
+    // suites (MultimodalSpec, StackSpec) plus the strict sibling rows q76
+    // (Theil–Sen), q81 (full feature row incl. std + aHash), q82
+    // (banded-LSH phash dedup) and q98 (full RANSAC). Remaining no_oracle
+    // rows: exactly q51/q59/q64 — the full-scale float forms whose strict
+    // siblings (q79/q93/q94) cannot express the raw-embedding/full-image
+    // runs.
     "q54_img_resize"       -> (Engine.imgResize _),
     "q55_frame_sample"     -> (Engine.frameSample _),
     "q57_resumable_job"    -> (Engine.resumableJob _),

@@ -104,7 +104,9 @@ object GraftFunctions {
   private def cd(e: Expression) = Cast(e, DoubleType)
   private def ci(e: Expression) = Cast(e, IntegerType)
   private def cl(e: Expression) = Cast(e, LongType)
-  private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  /** The one SQL function list: [[register]] and [[GraftExtensions]] both
+    * install exactly these builders. */
+  private[functions] val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
     ("zcell", es => ZCellEncode(cd(es(0)), cd(es(1)), ci(es(2)))),
     ("hexcell", es => HexCellEncode(cd(es(0)), cd(es(1)), ci(es(2)))),
     ("s2cell", es => S2CellEncode(cd(es(0)), cd(es(1)), ci(es(2)))),
@@ -123,27 +125,10 @@ object GraftFunctions {
   * (the spark-submit path of the north rule). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    def cd(x: Expression) = Cast(x, DoubleType)
-    def ci(x: Expression) = Cast(x, IntegerType)
-    def cl(x: Expression) = Cast(x, LongType)
-    e.injectFunction((FunctionIdentifier("zcell"),
-      new ExpressionInfo(classOf[ZCellEncode].getName, "zcell"),
-      (es: Seq[Expression]) => ZCellEncode(cd(es(0)), cd(es(1)), ci(es(2)))))
-    e.injectFunction((FunctionIdentifier("hexcell"),
-      new ExpressionInfo(classOf[HexCellEncode].getName, "hexcell"),
-      (es: Seq[Expression]) => HexCellEncode(cd(es(0)), cd(es(1)), ci(es(2)))))
-    e.injectFunction((FunctionIdentifier("s2cell"),
-      new ExpressionInfo(classOf[S2CellEncode].getName, "s2cell"),
-      (es: Seq[Expression]) => S2CellEncode(cd(es(0)), cd(es(1)), ci(es(2)))))
-    e.injectFunction((FunctionIdentifier("planar_cell"),
-      new ExpressionInfo(classOf[PlanarCellEncode].getName, "planar_cell"),
-      (es: Seq[Expression]) => PlanarCellEncode(cd(es(0)), cd(es(1)), cd(es(2)))))
-    e.injectFunction((FunctionIdentifier("planar_kring"),
-      new ExpressionInfo(classOf[PlanarKRing].getName, "planar_kring"),
-      (es: Seq[Expression]) => PlanarKRing(cl(es(0)), ci(es(1)))))
-    e.injectFunction((FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (es: Seq[Expression]) => VecDot(es(0), es(1))))
+    GraftFunctions.fns.foreach { case (name, b) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(b.getClass.getName, name), b))
+    }
     // custom whole-operator plan: nearest-time as-of join (graft.plans)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }

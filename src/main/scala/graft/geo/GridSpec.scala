@@ -29,11 +29,6 @@ final case class GridSpec(ulx: Double, uly: Double, res: Double, crs: String,
     val (px, py) = mapToPixel(mx, my)
     (math.floor(px + 0.5).toInt, math.floor(py + 0.5).toInt)
   }
-
-  def containsCell(cx: Int, cy: Int): Boolean = cx >= 0 && cx < w && cy >= 0 && cy < h
-
-  /** Flat pixel index (row-major), the per-pixel join key across aligned layers. */
-  def cellIndex(cx: Int, cy: Int): Long = cy.toLong * w + cx
 }
 
 object GridSpec {

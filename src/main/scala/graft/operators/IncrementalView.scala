@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.sources.SnapshotTable
 
@@ -15,8 +16,8 @@ import graft.sources.SnapshotTable
   *   - APPEND-ONLY range (appends + compactions): the O(delta) fast path —
   *       1. `SnapshotTable.changes(from, to)` — only the source layers
   *          committed since the last refresh (file-level scan);
-  *       2. a caller-supplied `fold` of those layers into canonical view
-  *          rows (one shuffle keyed on tile_id, map-side combined);
+  *       2. the view's aggregator folds those layers into canonical view
+  *          rows (one shuffle keyed on tile_id);
   *       3. ONE typed equi-join against the current view rows of the
   *          affected tiles (stats-pruned read), merging old⊕new with the
   *          caller's `combine` — a hand-written while-loop over the buffer
@@ -57,19 +58,21 @@ private[operators] object IncrementalView {
     SnapshotTable.lastCommittedEpoch(mvRoot, markerId(tilesRoot, kind))
 
   /** Advance the view at `mvRoot` to cover `tilesRoot`'s current version.
-    * `fold` maps source layers (TileRow-shaped) to typed view rows (the
-    * encoder's schema IS the table schema — first commit and every merge
-    * write the same shape); `combine(delta, old)` merges one pair of
-    * same-tile rows, delta first (the batch folds' operand order); `zero`
-    * builds the fold-identity row for a tile whose source layers all
-    * vanished (identity buffers: counts 0, min/max at their extremes — a
-    * later `combine` against it is a no-op). Returns the source version
-    * now covered (unchanged if already current). */
-  def refresh[V](spark: SparkSession, tilesRoot: String, mvRoot: String,
-                 kind: String, fold: DataFrame => Dataset[V],
-                 foldRun: (Long, Iterator[TileRow]) => V,
-                 combine: (V, V) => V, zero: Long => V)
-                (implicit enc: Encoder[V]): Long = {
+    * `agg` folds source layers into a buffer and `finish(tile_id, buffer)`
+    * packs it into a typed view row (the encoder's schema IS the table
+    * schema — first commit and every merge write the same shape); every
+    * path folds through these two, so the view has one definition of its
+    * aggregation: the Dataset fold is [[StackOps.partialFold]], and the
+    * identity row for a tile whose source layers all vanished is
+    * `finish(tile_id, agg.zero)` (counts 0, min/max at their extremes — a
+    * later `combine` against it is a no-op). `combine(delta, old)` merges
+    * one pair of same-tile view rows, delta first (the batch folds'
+    * operand order). Returns the source version now covered (unchanged if
+    * already current). */
+  def refresh[B, V](spark: SparkSession, tilesRoot: String, mvRoot: String,
+                    kind: String, agg: Aggregator[TileRow, B, V],
+                    finish: (Long, B) => V, combine: (V, V) => V)
+                   (implicit enc: Encoder[V]): Long = {
     val to = SnapshotTable.currentVersion(tilesRoot).toLong
     val from = refreshedVersion(mvRoot, tilesRoot, kind)
     if (to <= math.max(from, 0L)) return from
@@ -94,21 +97,20 @@ private[operators] object IncrementalView {
       "spark.sql.parquet.columnarReaderBatchSize" -> "128")
     val saved = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
     scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-    try refreshInner(spark, tilesRoot, mvRoot, kind, fold, foldRun, combine,
-      zero, to, from)
+    try refreshInner(spark, tilesRoot, mvRoot, kind, agg, finish, combine, to,
+      from)
     finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
   }
 
-  private def refreshInner[V](spark: SparkSession, tilesRoot: String,
-                              mvRoot: String, kind: String,
-                              fold: DataFrame => Dataset[V],
-                              foldRun: (Long, Iterator[TileRow]) => V,
-                              combine: (V, V) => V, zero: Long => V,
-                              to: Long, from: Long)
-                             (implicit enc: Encoder[V]): Long = {
+  private def refreshInner[B, V](spark: SparkSession, tilesRoot: String,
+                                 mvRoot: String, kind: String,
+                                 agg: Aggregator[TileRow, B, V],
+                                 finish: (Long, B) => V, combine: (V, V) => V,
+                                 to: Long, from: Long)
+                                (implicit enc: Encoder[V]): Long = {
     val marker = markerId(tilesRoot, kind)
     val fromI = math.max(from, 0L).toInt
 
@@ -126,13 +128,18 @@ private[operators] object IncrementalView {
     val cdcReplayable = rangeOps.forall(_.exists(sn =>
       sn.op != "rollback" && !sn.cdcOff))
 
+    // the Dataset fold (rebuild and churn recompute)
+    val fold = (src: DataFrame) =>
+      StackOps.partialFold(
+        src.as(org.apache.spark.sql.Encoders.product[TileRow]), agg)(finish)
     if (appendOnly)
-      refreshAppendOnly(spark, tilesRoot, mvRoot, marker, fromI, to, foldRun,
-        combine)
+      refreshAppendOnly(spark, tilesRoot, mvRoot, marker, fromI, to, agg,
+        finish, combine)
     else if (mvEmpty || !cdcReplayable)
       rebuild(spark, tilesRoot, mvRoot, marker, to, fold, mvEmpty)
     else
-      refreshChurned(spark, tilesRoot, mvRoot, marker, fromI, to, fold, zero)
+      refreshChurned(spark, tilesRoot, mvRoot, marker, fromI, to, fold,
+        tid => finish(tid, agg.zero))
     to
   }
 
@@ -140,22 +147,24 @@ private[operators] object IncrementalView {
     * FUSED into one shuffle. The raw delta rows and the envelope-pruned
     * old-view rows travel through a single tagged-union exchange keyed on
     * tile_id; the post-shuffle stage sorts each partition by tile_id and
-    * streams one tile at a time — folding that tile's delta rows
-    * (`foldRun`) and combining with its at-most-one old row — straight
-    * into the merge commit's write. The earlier two-stage form (fold to a
-    * partial Dataset, then a full-outer sort-merge join) paid an extra
-    * Exchange of the fat ~100-300 KB fold buffers plus a separate join
-    * stage (guide §2.4 — remove shuffles outright). Fold/combine order is
+    * streams one tile at a time — reducing each of that tile's delta rows
+    * into one `agg` buffer as it arrives, finishing it, and combining with
+    * its at-most-one old row — straight into the merge commit's write.
+    * A fold-then-join form (fold to a partial Dataset, then a full-outer
+    * sort-merge join) pays an extra Exchange of the fat ~100-300 KB fold
+    * buffers plus a separate join stage (guide §2.4 — remove shuffles
+    * outright). Fold/combine order is
     * unchanged in spirit (delta-first operand order) and outputs are
     * order-independent on the engine's exact-sum payloads, which the
     * strict oracles gate. The old-view side still never broadcasts (no
     * join exists to mis-broadcast); each fat row moves exactly once. */
-  private def refreshAppendOnly[V](spark: SparkSession, tilesRoot: String,
-                                   mvRoot: String, marker: String, fromI: Int,
-                                   to: Long,
-                                   foldRun: (Long, Iterator[TileRow]) => V,
-                                   combine: (V, V) => V)
-                                  (implicit enc: Encoder[V]): Unit = {
+  private def refreshAppendOnly[B, V](spark: SparkSession, tilesRoot: String,
+                                      mvRoot: String, marker: String,
+                                      fromI: Int, to: Long,
+                                      agg: Aggregator[TileRow, B, V],
+                                      finish: (Long, B) => V,
+                                      combine: (V, V) => V)
+                                     (implicit enc: Encoder[V]): Unit = {
     val delta = SnapshotTable.changes(spark, tilesRoot, fromI, to.toInt)
     // affected-tile envelope bounds BOTH the old-view read and the
     // merge's file rewrites; conservative (range, not id set). Derived
@@ -212,16 +221,17 @@ private[operators] object IncrementalView {
             def hasNext: Boolean = cur != null
             def next(): V = {
               val k = cur._1
-              val rows = scala.collection.mutable.ArrayBuffer.empty[TileRow]
+              var b: B = null.asInstanceOf[B]      // null: no delta rows
               var o: V = null.asInstanceOf[V]
               while (cur != null && cur._1 == k) {
-                if (cur._2 != null) rows += cur._2
+                if (cur._2 != null)
+                  b = agg.reduce(if (b == null) agg.zero else b, cur._2)
                 if (cur._3 != null) o = cur._3     // unique per view key
                 cur = if (it.hasNext) it.next() else null
               }
-              val d = if (rows.isEmpty) null.asInstanceOf[V]
-                      else foldRun(k, rows.iterator)
-              if (o == null) d else if (d == null) o else combine(d, o)
+              if (b == null) o
+              else if (o == null) finish(k, b)
+              else combine(finish(k, b), o)
             }
           }
         }
@@ -344,13 +354,13 @@ private[operators] object IncrementalView {
   private[operators] def unpackF(a: Array[Byte]): Array[Float] = {
     val o = new Array[Float](a.length / 4); bb(a).asFloatBuffer.get(o); o
   }
-  private[operators] def addIP(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+  private[operators] def sumIP(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
     val n = a.length / 4; val o = new Array[Byte](a.length)
     val ab = bb(a).asIntBuffer; val xb = bb(b).asIntBuffer
     val ob = bb(o).asIntBuffer
     var i = 0; while (i < n) { ob.put(i, ab.get(i) + xb.get(i)); i += 1 }; o
   }
-  private[operators] def addDP(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+  private[operators] def sumDP(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
     val n = a.length / 8; val o = new Array[Byte](a.length)
     val ab = bb(a).asDoubleBuffer; val xb = bb(b).asDoubleBuffer
     val ob = bb(o).asDoubleBuffer
@@ -399,31 +409,5 @@ private[operators] object IncrementalView {
       ob.put(i, if (x >= y) x else y); i += 1
     }
     o
-  }
-
-  // ---- while-loop array combiners shared by the views' `combine`s ----
-  private[operators] def addI(a: Array[Int], b: Array[Int]): Array[Int] = {
-    val n = a.length; val o = new Array[Int](n)
-    var i = 0; while (i < n) { o(i) = a(i) + b(i); i += 1 }; o
-  }
-  private[operators] def addD(a: Array[Double], b: Array[Double]): Array[Double] = {
-    val n = a.length; val o = new Array[Double](n)
-    var i = 0; while (i < n) { o(i) = a(i) + b(i); i += 1 }; o
-  }
-  private[operators] def minD(a: Array[Double], b: Array[Double]): Array[Double] = {
-    val n = a.length; val o = new Array[Double](n)
-    var i = 0; while (i < n) { o(i) = if (a(i) <= b(i)) a(i) else b(i); i += 1 }; o
-  }
-  private[operators] def maxD(a: Array[Double], b: Array[Double]): Array[Double] = {
-    val n = a.length; val o = new Array[Double](n)
-    var i = 0; while (i < n) { o(i) = if (a(i) >= b(i)) a(i) else b(i); i += 1 }; o
-  }
-  private[operators] def minF(a: Array[Float], b: Array[Float]): Array[Float] = {
-    val n = a.length; val o = new Array[Float](n)
-    var i = 0; while (i < n) { o(i) = if (a(i) <= b(i)) a(i) else b(i); i += 1 }; o
-  }
-  private[operators] def maxF(a: Array[Float], b: Array[Float]): Array[Float] = {
-    val n = a.length; val o = new Array[Float](n)
-    var i = 0; while (i < n) { o(i) = if (a(i) >= b(i)) a(i) else b(i); i += 1 }; o
   }
 }

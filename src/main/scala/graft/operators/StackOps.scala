@@ -83,21 +83,6 @@ object StackOps {
     def outputEncoder: Encoder[TileStats] = Encoders.product[TileStats]
   }
 
-  /** ONE-shuffle vector fold: co-locate rows by tile, sort each partition
-    * by tile_id, and stream one complete group at a time through the
-    * aggregator. Rationale: Spark's own hash aggregation holds every
-    * group's vector buffer simultaneously and spills (measured 5× slower
-    * in round 1); the earlier two-phase form (per-partition LRU partials +
-    * a groupByKey merge) became vestigial once the fold co-located rows by
-    * tile — with every row of a tile in one partition each partial IS the
-    * final buffer, yet the merge still paid a second Exchange of the fat
-    * 100-300 KB buffers plus their per-element encoder round-trip. The
-    * local sort makes each tile one contiguous run, so a single live
-    * buffer per task suffices and finished rows stream straight out
-    * (guide §2.4 — remove shuffles outright). Fold order changes with
-    * partitioning either way; outputs are order-independent on the
-    * engine's exact-sum payloads (integer-valued floats, dyadic time), as
-    * the strict oracle gate checks at two CPU counts. */
   /** Explicit width for the CPU-bound vector-fold stages (shared with the
     * incremental views' fused refresh): never below the machine's
     * parallelism, because the ~100-200× compressed shuffle size would let
@@ -106,8 +91,18 @@ object StackOps {
     math.max(spark.sparkContext.defaultParallelism,
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
 
+  /** ONE-shuffle vector fold: co-locate rows by tile, sort each partition
+    * by tile_id, and stream one complete group at a time through the
+    * aggregator's zero/reduce; `finish(tile_id, buffer)` emits the tile's
+    * row. Spark's own hash aggregation holds every group's vector buffer
+    * simultaneously and spills (measured 5× slower in round 1); the local
+    * sort makes each tile one contiguous run, so a single live buffer per
+    * task suffices and finished rows stream straight out. Fold order
+    * follows partitioning; outputs are order-independent on the engine's
+    * exact-sum payloads (integer-valued floats, dyadic time), as the
+    * strict oracle gate checks at two CPU counts. */
   private[operators] def partialFold[B, O: Encoder](
-      tiles: Dataset[TileRow], agg: Aggregator[TileRow, B, O], maxLive: Int)(
+      tiles: Dataset[TileRow], agg: Aggregator[TileRow, B, O])(
       finish: (Long, B) => O): Dataset[O] = {
     // explicit partition count (not AQE-advisory-sized): the fold is
     // CPU-bound per DECODED byte, and the ~100-200× compressed shuffle
@@ -139,31 +134,29 @@ object StackOps {
   }
 
   def stackStats(tiles: Dataset[TileRow], tileSize: Int = Warp.TileSize,
-                 ndv: Float = ImageTable.Ndv,
-                 maxLiveBuffers: Int = 2048): Dataset[TileStats] = {
+                 ndv: Float = ImageTable.Ndv): Dataset[TileStats] = {
     val spark = tiles.sparkSession
     import spark.implicits._
     val agg = new TileStatsAgg(tileSize * tileSize, ndv)
-    partialFold(tiles, agg, maxLiveBuffers)((tid, b) => agg.finish(b).copy(tile_id = tid))
+    partialFold(tiles, agg)((tid, b) => agg.finish(b).copy(tile_id = tid))
   }
 
   /** Per-band, per-pixel stack stats over multi-band tiles. The band folds
     * into the aggregation key (band-composite tile id: tile_id·nBands +
-    * band), so the SAME bounded partial-fold + TileStatsAgg path serves
+    * band), so the SAME partial-fold + TileStatsAgg path serves
     * every band and bands aggregate independently — the distributed form
     * of running malib's stack stats once per band (`malib.py:559-587`
     * driven by the `warplib.py:146-153` band loop). One shuffle keyed on
     * (band, tile); no cross-band traffic by construction. */
   def stackStatsBands(tiles: Dataset[BandTileRow], nBands: Int,
                       tileSize: Int = Warp.TileSize,
-                      ndv: Float = ImageTable.Ndv,
-                      maxLiveBuffers: Int = 2048): Dataset[BandTileStats] = {
+                      ndv: Float = ImageTable.Ndv): Dataset[BandTileStats] = {
     val spark = tiles.sparkSession
     import spark.implicits._
     require(nBands >= 1, s"nBands $nBands")
     val keyed = tiles.map(b => TileRow(b.image_id, b.ts_us,
       b.tile_id * nBands + b.band, b.tx, b.ty, b.payload, b.n_valid, b.elided))
-    stackStats(keyed, tileSize, ndv, maxLiveBuffers).map { st =>
+    stackStats(keyed, tileSize, ndv).map { st =>
       BandTileStats((st.tile_id % nBands).toInt, st.tile_id / nBands,
         st.n_layers, st.count, st.mean, st.std, st.vmin, st.vmax)
     }
@@ -308,13 +301,13 @@ object StackOps {
   def trend(tiles: Dataset[TileRow], tileSize: Int = Warp.TileSize,
             ndv: Float = ImageTable.Ndv, nThresh: Int = 2,
             minDtPtp: Double = 0.0, confTest: Boolean = false,
-            alpha: Double = 0.05, maxLiveBuffers: Int = 2048,
+            alpha: Double = 0.05,
             diagnostics: Boolean = true): Dataset[TileTrend] = {
     val spark = tiles.sparkSession
     import spark.implicits._
     val agg = new TileTrendAgg(tileSize * tileSize, ndv, nThresh, minDtPtp, confTest,
       alpha, diagnostics)
-    partialFold(tiles, agg, maxLiveBuffers)((tid, b) => agg.finish(b).copy(tile_id = tid))
+    partialFold(tiles, agg)((tid, b) => agg.finish(b).copy(tile_id = tid))
   }
 
   /** The reference's default time-spread gate when none is given
@@ -380,12 +373,11 @@ object StackOps {
   }
 
   def dtStats(tiles: Dataset[TileRow], tileSize: Int = Warp.TileSize,
-              ndv: Float = ImageTable.Ndv,
-              maxLiveBuffers: Int = 2048): Dataset[TileDt] = {
+              ndv: Float = ImageTable.Ndv): Dataset[TileDt] = {
     val spark = tiles.sparkSession
     import spark.implicits._
     val agg = new TileDtAgg(tileSize * tileSize, ndv)
-    partialFold(tiles, agg, maxLiveBuffers)((tid, b) => agg.finish(b).copy(tile_id = tid))
+    partialFold(tiles, agg)((tid, b) => agg.finish(b).copy(tile_id = tid))
   }
 
   /** Long form: one row per valid pixel — `get_xyz` `malib.py:1854-1859`

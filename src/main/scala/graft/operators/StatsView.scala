@@ -18,8 +18,8 @@ import graft.sources.{ImageTable, SnapshotTable}
   *
   *   1. `SnapshotTable.changes(from, to)` — ONLY the layers committed
   *      since the last refresh (O(delta) scan, file-level);
-  *   2. the bounded partial-fold of those layers into per-tile buffers
-  *      (one shuffle keyed on tile_id, map-side combined);
+  *   2. the partial-fold of those layers into per-tile buffers
+  *      (one shuffle keyed on tile_id);
   *   3. ONE typed equi-join against the current view rows of the affected
   *      tiles (stats-pruned read) merging old+new buffers element-wise with
   *      a hand-written while-loop (JITs to straight array arithmetic; the
@@ -78,23 +78,14 @@ object StatsView {
     * (delta-first operand order), as a JIT-friendly while-loop. */
   def refresh(spark: SparkSession, tilesRoot: String, mvRoot: String,
               tileSize: Int = Warp.TileSize,
-              ndv: Float = ImageTable.Ndv,
-              maxLiveBuffers: Int = 2048): Long = {
-    import spark.implicits._
+              ndv: Float = ImageTable.Ndv): Long = {
     import IncrementalView._
     val agg = new MvAgg(tileSize * tileSize, ndv)
-    IncrementalView.refresh[MvRow](spark, tilesRoot, mvRoot, "statsview",
-      delta => StackOps.partialFold(delta.as[TileRow], agg, maxLiveBuffers)(
-        (tid, b) => agg.finish(b).copy(tile_id = tid)),
-      (tid, it) => {                 // one-tile fold for the fused refresh
-        var b = agg.zero
-        it.foreach(t => b = agg.reduce(b, t))
-        agg.finish(b).copy(tile_id = tid)
-      },
-      (d, o) => MvRow(d.tile_id, d.n + o.n, addIP(d.cnt, o.cnt),
-        addDP(d.sum, o.sum), addDP(d.sumsq, o.sumsq),
-        minFP(d.vmin, o.vmin), maxFP(d.vmax, o.vmax)),
-      tid => agg.finish(agg.zero).copy(tile_id = tid))
+    IncrementalView.refresh(spark, tilesRoot, mvRoot, "statsview", agg,
+      (tid: Long, b: StackOps.StatsBuf) => agg.finish(b).copy(tile_id = tid),
+      (d: MvRow, o: MvRow) => MvRow(d.tile_id, d.n + o.n, sumIP(d.cnt, o.cnt),
+        sumDP(d.sum, o.sum), sumDP(d.sumsq, o.sumsq),
+        minFP(d.vmin, o.vmin), maxFP(d.vmax, o.vmax)))(agg.outputEncoder)
   }
 
   /** View-table maintenance (tile-sorted compaction + snapshot expiry);

@@ -59,9 +59,9 @@ object TrendView {
     * operand order) as a JIT-friendly while-loop. */
   private[operators] def combineRows(d: MvRow, o: MvRow): MvRow = {
     import IncrementalView._
-    MvRow(d.tile_id, d.n + o.n, addIP(d.cnt, o.cnt), addDP(d.st, o.st),
-      addDP(d.stt, o.stt), addDP(d.sy, o.sy), addDP(d.sty, o.sty),
-      addDP(d.syy, o.syy), minDP(d.tmin, o.tmin), maxDP(d.tmax, o.tmax))
+    MvRow(d.tile_id, d.n + o.n, sumIP(d.cnt, o.cnt), sumDP(d.st, o.st),
+      sumDP(d.stt, o.stt), sumDP(d.sy, o.sy), sumDP(d.sty, o.sty),
+      sumDP(d.syy, o.syy), minDP(d.tmin, o.tmin), maxDP(d.tmax, o.tmax))
   }
 
   /** Advance the view at `mvRoot` to cover `tilesRoot`'s current version.
@@ -70,20 +70,11 @@ object TrendView {
     * order) as a JIT-friendly while-loop. */
   def refresh(spark: SparkSession, tilesRoot: String, mvRoot: String,
               tileSize: Int = Warp.TileSize,
-              ndv: Float = ImageTable.Ndv,
-              maxLiveBuffers: Int = 2048): Long = {
-    import spark.implicits._
+              ndv: Float = ImageTable.Ndv): Long = {
     val agg = new MvAgg(tileSize * tileSize, ndv)
-    IncrementalView.refresh[MvRow](spark, tilesRoot, mvRoot, "trendview",
-      delta => StackOps.partialFold(delta.as[TileRow], agg, maxLiveBuffers)(
-        (tid, b) => agg.finish(b).copy(tile_id = tid)),
-      (tid, it) => {                 // one-tile fold for the fused refresh
-        var b = agg.zero
-        it.foreach(t => b = agg.reduce(b, t))
-        agg.finish(b).copy(tile_id = tid)
-      },
-      combineRows,
-      tid => agg.finish(agg.zero).copy(tile_id = tid))
+    IncrementalView.refresh(spark, tilesRoot, mvRoot, "trendview", agg,
+      (tid: Long, b: StackOps.TrendBuf) => agg.finish(b).copy(tile_id = tid),
+      combineRows)(agg.outputEncoder)
   }
 
   /** View-table maintenance (tile-sorted compaction + snapshot expiry);

@@ -62,6 +62,16 @@ class CellExpressionsSpec extends AnyFunSuite {
   test("spark.sql.extensions path: functions AND planner strategy injected at build") {
     import org.apache.spark.sql.SparkSession
     val prev = spark // force shared-session init first
+    // every registered function, once each, on one row
+    val allFns =
+      """SELECT zcell(-122.33, 47.61, 9) z, hexcell(-122.33, 47.61, 8) h,
+        |       s2cell(-122.33, 47.61, 14) s,
+        |       planar_cell(-122330.0, 47610.0, 64.0) p,
+        |       planar_kring(planar_cell(-122330.0, 47610.0, 64.0), 1) kr,
+        |       vec_dot(array(CAST(1 AS FLOAT), CAST(2 AS FLOAT)),
+        |               array(CAST(3 AS FLOAT), CAST(4 AS FLOAT))) d""".stripMargin
+    GraftFunctions.register(prev)
+    val registered = prev.sql(allFns).head()
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     // withExtensions = the same injection surface spark.sql.extensions uses
@@ -73,9 +83,14 @@ class CellExpressionsSpec extends AnyFunSuite {
       .getOrCreate()
     try {
       assert(s2 ne prev)
-      // SQL functions resolve with NO manual registration (the spark-submit path)
+      // SQL functions resolve with NO manual registration (the spark-submit
+      // path), and each agrees with the register() path
       assert(s2.sql("SELECT zcell(0.0, 0.0, 5)").head().getLong(0) ==
         ZCell.encode(0.0, 0.0, 5))
+      val injected = s2.sql(allFns).head()
+      assert(injected.schema.fieldNames.toSeq == Seq("z", "h", "s", "p", "kr", "d"))
+      assert(injected == registered)
+      assert(injected.getSeq[Long](4).length == 9 && injected.getDouble(5) == 11.0)
       // the custom as-of strategy plans with NO AsOf.install
       import s2.implicits._
       import org.apache.spark.sql.GraftSqlBridge

@@ -89,6 +89,41 @@ class TrendViewSpec extends AnyFunSuite {
     assert(replayed.isEmpty, "replayed refresh epoch must be skipped")
   }
 
+  test("vanished tiles read empty; a later re-append revives them exactly") {
+    import spark.implicits._
+    val tilesRoot = freshRoot("van_t"); val mvRoot = freshRoot("van_mv")
+    val images = ImageTable.generate(spark, 18).filter(idx % 3 === 0)
+    val target = Warp.analyze(images, "min", "union")
+    def tiles() = Warp.warpToTiles(spark, images, target, "near").toDF()
+    SnapshotTable.commit(spark, tilesRoot, tiles())
+    assert(TrendView.refresh(spark, tilesRoot, mvRoot) == 1)
+    // delete EVERY row: all tiles vanish; the view keeps their identity
+    // rows, which must read as "no data" (count 0, every output masked)
+    SnapshotTable.delete(spark, tilesRoot, lit(true))
+    assert(TrendView.refresh(spark, tilesRoot, mvRoot) == 2)
+    val ndv = ImageTable.Ndv
+    val zeroed = TrendView.trend(spark, mvRoot).as[StackOps.TileTrend].collect()
+    assert(zeroed.nonEmpty && zeroed.forall(s => s.count.forall(_ == 0) &&
+      Seq(s.slope_yr, s.intercept, s.r2, s.t_stat).forall(_.forall(_ == ndv))))
+    // re-append the same layers: view matches batch again, bit for bit
+    SnapshotTable.commit(spark, tilesRoot, tiles())
+    assert(TrendView.refresh(spark, tilesRoot, mvRoot) == 3)
+    val incr = TrendView.trend(spark, mvRoot).as[StackOps.TileTrend]
+      .collect().map(s => s.tile_id -> s).toMap
+    val batch = StackOps.trend(
+      SnapshotTable.read(spark, tilesRoot).as[TileRow]).collect()
+    assert(batch.nonEmpty && incr.size == batch.length)
+    batch.foreach { s =>
+      val i = incr(s.tile_id)
+      assert(i.count.toSeq == s.count.toSeq &&
+        i.slope_yr.toSeq == s.slope_yr.toSeq &&
+        i.intercept.toSeq == s.intercept.toSeq &&
+        i.r2.toSeq == s.r2.toSeq && i.t_stat.toSeq == s.t_stat.toSeq,
+        s"tile ${s.tile_id}")
+    }
+    assert(batch.exists(_.slope_yr.exists(_ != ndv)))
+  }
+
   test("source churn (merge + delete) recomputes affected tiles, bit-exact") {
     import spark.implicits._
     val tilesRoot = freshRoot("churn_t"); val mvRoot = freshRoot("churn_mv")
